@@ -29,10 +29,14 @@ object Bench {
     // min hash-agg, band self-join) whose generated-code compile + JIT
     // otherwise lands on the first timed dedup query — measured 3×
     // first-run inflation on q31 (9.7s cold vs 3.0s warm at sf0.1).
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // A failed warmup moves its JIT cost into a timed slot, so it is
+    // reported, never swallowed.
+    def warm(what: String)(body: => Any): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $what FAILED: ${e.getMessage}") }
+    warm("entry")(SparkEntry.entry(spark).count())
     val warmDir = "/root/testdata/sf0.001"
-    try graft.queries.Pipeline.q31MinhashLsh(spark, warmDir)
-      .count() catch { case _: Throwable => }
+    warm("q31MinhashLsh")(graft.queries.Pipeline.q31MinhashLsh(spark, warmDir).count())
     // Streaming queries pay micro-batch-engine + state-store codegen on
     // first use (measured: q64 8.3s cold vs 3.7s warm, q56 4.8 vs 2.5 at
     // sf0.1); the five streaming shapes (windowed agg, mapGroupsWithState,
@@ -87,25 +91,8 @@ object Bench {
       graft.queries.Stats.q316CcfDaily _,
       graft.queries.Curation.q291GiniStump _,
       graft.queries.Analytics.q318UserGini _
-    ).foreach { f => try f(spark, warmDir).count() catch { case _: Throwable => } }
-
-    // The reference memoizes columns across queries in its Pool
-    // (reference: src/pool.rs:37-95); the Spark analog is caching the
-    // base scans — CacheManager then substitutes the InMemoryRelation
-    // into every query plan that scans the same files. Default OFF:
-    // measured 4× SLOWER here — InMemoryTableScan of string/array
-    // columns loses to the parquet vectorized reader, and cache
-    // substitution changes the codegen shape of the text/vector
-    // queries. Local parquet IS the fast path; at cluster scale cache
-    // selectively (small dims), never wide text/embedding columns.
-    if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "0") == "1") {
-      Seq("lineitem", "orders", "customer", "part", "supplier",
-        "nation", "region", "documents", "embeddings").foreach { t =>
-        try {
-          val df = spark.read.parquet(s"$sfDir/$t.parquet")
-          df.cache(); df.count()
-        } catch { case _: Throwable => }
-      }
+    ).zipWithIndex.foreach { case (f, i) =>
+      warm(s"shape #${i + 1}")(f(spark, warmDir).count())
     }
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

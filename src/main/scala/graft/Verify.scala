@@ -56,7 +56,8 @@ object Verify {
           Seq(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}")
             .toDF("__graft_query_crashed")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        } catch { case e2: Throwable =>
+          System.err.println(s"[verify] $name crash marker FAILED: ${e2.getMessage}") }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation => C, TextAnalysis => TA}
+import graft.util.SessionMemo
 
 /** Dataset-curation queries (q57-q63): the train-time data-management
   * layer a 100 TB pipeline needs on top of the analysis/dedup surface —
@@ -1265,12 +1266,11 @@ object Curation {
   // sub-corpus-sized (density 2/(w+1) — 81.6k rows at sf0.1) and every
   // consumer's fold is cheap next to the build (R14Q233Probe: build
   // 4.6 s of q233's 7.2 s fused fresh at sf0.1). Eager localCheckpoint
-  // inside the synchronized computeIfAbsent (rule 16); evicts with the
-  // session (SessionMemo).
-  private val winnowFps = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // inside the memo's build (rule 16); evicts with the session
+  // (SessionMemo).
+  private val winnowFps = new SessionMemo[DataFrame]("winnowFpsOf")
   private def winnowFpsOf(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(winnowFps, spark, dir) {
+    winnowFps(spark, dir) {
       C.winnowFingerprints(docs(spark, dir), "doc_id", "text",
         k = 4, w = 5).localCheckpoint(eager = true)
     }
@@ -1488,16 +1488,15 @@ object Curation {
   /** ONE full-corpus BPE training per (session, dir), serving both
     * full-corpus consumers: q213 reads the per-round stats, q216 the
     * final symbol frame — previously two bit-identical 3-round train
-    * chains back to back (r13; the `trainedMerges97Of` discipline at
+    * chains back to back (r13; the `bpeHeldoutSegs97Of` discipline at
     * the full-corpus rung). The symbol frame is eagerly checkpointed
-    * inside the computeIfAbsent (rule 16); entries evict with the
+    * inside the memo's build (rule 16); entries evict with the
     * session (SessionMemo). */
-  private val bpeFullTrain = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame)]()
+  private val bpeFullTrain = new SessionMemo[
+    (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame)]("bpeFullTrainOf")
   private def bpeFullTrainOf(spark: SparkSession, dir: String)
       : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) =
-    graft.util.SessionMemo.cached(bpeFullTrain, spark, dir) {
+    bpeFullTrain(spark, dir) {
       val (stats, syms) = C.bpeTrainFull(docs(spark, dir), "text", rounds = 3)
       val cut = syms.localCheckpoint(true)
       syms.unpersist()
@@ -1625,27 +1624,15 @@ object Curation {
   // argmax, so a drifted likelihood pick changes the eval vocabulary
   // and fails the hash.
   // -------------------------------------------------------------------
-  /** Process-level memo of the FROZEN train-split WordPiece merge
-    * list — the `trainedMerges97Of` pattern at the WordPiece rung,
-    * shared by q281 (held-out usage) and q282 (fertility). Keyed by
-    * (dir, rounds); deterministic in the key, so the memo only ever
-    * skips a bit-identical recompute. */
-  private val wpTrainedMerges97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
-  private def wpTrainedMerges97Of(spark: SparkSession, dir: String,
-      rounds: Int): Seq[(String, String)] =
-    wpTrainedMerges97.computeIfAbsent((dir, rounds), _ =>
-      C.wordpieceTrainedMerges(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
-
-  /** The held-out split under the frozen WordPiece list — the
-    * [[bpeHeldoutSegs97Of]] pattern at the WordPiece rung, shared by
-    * q281 (vocabulary) and q282 (fertility). */
-  private val wpSegs97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  /** The held-out split under the FROZEN train-split WordPiece merge
+    * list — the [[bpeHeldoutSegs97Of]] pattern at the WordPiece rung,
+    * shared by q281 (vocabulary) and q282 (fertility): the 3-round
+    * train runs once per (session, dir), inside this memo's build. */
+  private val wpSegs97 = new SessionMemo[DataFrame]("wpHeldoutSegs97Of")
   private def wpHeldoutSegs97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(wpSegs97, spark, dir) {
-      val merges = wpTrainedMerges97Of(spark, dir, rounds = 3)
+    wpSegs97(spark, dir) {
+      val merges = C.wordpieceTrainedMerges(
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)
       val cut = segs.localCheckpoint(true)
@@ -1816,32 +1803,24 @@ object Curation {
   // a recursive-CTE chase. A drifted trained vocab, a leaked eval
   // token, or a wrong greedy match all shift the usage table → FAIL.
   // -------------------------------------------------------------------
-  /** The frozen train-split unigram vocabulary, memoized per
-    * (dir, rounds) — the `trainedMerges97Of` pattern at the unigram
-    * rung, shared by q263 (held-out usage) and q265 (fertility):
-    * deterministic in the key, so the memo only ever skips a
-    * bit-identical retrain. */
-  private val unigramVocab97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[String]]()
-  private def unigramVocab97Of(spark: SparkSession, dir: String,
-      rounds: Int): Seq[String] =
-    unigramVocab97.computeIfAbsent((dir, rounds), _ =>
-      C.unigramTrainedVocab(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
-
   /** The held-out greedy-longest-match VALID-START frame under the
-    * frozen unigram vocab ([[C.unigramStarts]]), memoized per
-    * (session, dir): the orbit (hit join + pointer doubling) is the
-    * dominant cost of every unigram apply query, and q263 (usage),
+    * frozen train-split unigram vocab ([[C.unigramStarts]]), memoized
+    * per (session, dir): the orbit (hit join + pointer doubling) is
+    * the dominant cost of every unigram apply query, and q263 (usage),
     * q265 (fertility) and q267 (agreement boundaries) each rebuilt it
     * from scratch — their folds are cheap aggregates over this one
-    * frame. Orbit output is already eagerly checkpointed inside the
-    * computeIfAbsent (unigramOrbit localCheckpoint(true)s its fold). */
-  private val uniStarts97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * frame. The vocabulary (2 hard-EM rounds, q262's schedule) trains
+    * once per (session, dir), inside this memo's build — the
+    * production train-once/ship-frozen shape; both halves are
+    * deterministic in (dir), so the memo only ever skips a
+    * bit-identical recompute. Orbit output is already eagerly
+    * checkpointed inside the build (unigramOrbit localCheckpoint(true)s
+    * its fold). */
+  private val uniStarts97 = new SessionMemo[DataFrame]("unigramStarts97Of")
   private def unigramStarts97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(uniStarts97, spark, dir) {
-      val vocab = unigramVocab97Of(spark, dir, rounds = 2)
+    uniStarts97(spark, dir) {
+      val vocab = C.unigramTrainedVocab(
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds = 2)
       C.unigramStarts(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", vocab)
     }
@@ -2061,39 +2040,25 @@ object Curation {
   // best$i — a drifted trained merge, or an apply round that
   // re-argmaxes, both change the eval vocabulary and fail the hash.
   // -------------------------------------------------------------------
-  /** Process-level memo of the FROZEN train-split BPE merge list —
-    * the model (≤ rounds pairs), shared by every held-out consumer
-    * (q224 apply, q235 fertility), exactly as a production pipeline
-    * trains a tokenizer ONCE and ships the frozen artifact to every
-    * downstream job rather than retraining per consumer (the
-    * round-9 verdict's suggested trim; isolated Q235Probe decomposed
-    * q235 as 4.0 s train + 4.4 s apply at sf0.1 — the memo removes
-    * the train half from the second consumer onward in any shared
-    * JVM: Verify, Bench, the driver). Keyed by (dir, rounds); the
-    * train-side input is deterministic in the key (documents at
-    * `dir`, the fixed doc_id % 97 != 0 split), and bpeTrainedMerges
-    * itself is deterministic, so the memo can never change a result —
-    * only skip a bit-identical recompute. */
-  private val trainedMerges97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
-  private def trainedMerges97Of(spark: SparkSession, dir: String,
-      rounds: Int): Seq[(String, String)] =
-    trainedMerges97.computeIfAbsent((dir, rounds), _ =>
-      C.bpeTrainedMerges(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
-
   /** The held-out split SEGMENTED under the frozen train-split BPE
-    * merges, memoized per (session, dir) — the apply half of the
-    * chain, previously recomputed by EVERY held-out consumer (q224
-    * vocabulary, q235 fertility, q267 agreement each replayed the 3
-    * apply rounds; Q235Probe pinned the apply at ~4.4 s of the ~8.4 s
-    * composite). The frame is word-TYPE-sized (w, wc, p, s), eagerly
-    * checkpointed inside the computeIfAbsent (rule 16). */
-  private val bpeSegs97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * merges, memoized per (session, dir) and shared by every held-out
+    * consumer (q224 vocabulary, q235 fertility, q267 agreement),
+    * exactly as a production pipeline trains a tokenizer ONCE and
+    * ships the frozen artifact to every downstream job rather than
+    * retraining per consumer. Both halves of the chain run once per
+    * (session, dir), inside this memo's build: the 3-round train on
+    * the doc_id % 97 != 0 split (the model, ≤ rounds pairs) and the
+    * apply on the held-out split — isolated Q235Probe decomposed q235
+    * as 4.0 s train + 4.4 s apply at sf0.1, and before the memo EVERY
+    * consumer replayed the apply rounds. Both halves are deterministic
+    * in (dir), so the memo can never change a result — only skip a
+    * bit-identical recompute. The frame is word-TYPE-sized
+    * (w, wc, p, s), eagerly checkpointed inside the build (rule 16). */
+  private val bpeSegs97 = new SessionMemo[DataFrame]("bpeHeldoutSegs97Of")
   private def bpeHeldoutSegs97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(bpeSegs97, spark, dir) {
-      val merges = trainedMerges97Of(spark, dir, rounds = 3)
+    bpeSegs97(spark, dir) {
+      val merges = C.bpeTrainedMerges(
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)
       val cut = segs.localCheckpoint(true)

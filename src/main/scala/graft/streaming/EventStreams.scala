@@ -445,8 +445,8 @@ object EventStreams {
     * driver. State in the state store stays timeout-bounded; the sink
     * is |users|-sized ON DISK, not in driver memory — at 100 TB the
     * file swap hands off to a lakehouse MERGE, same shape.
-    * (Round 3 shipped a driver-side ConcurrentHashMap here — correct
-    * at 150 users, a driver OOM at 10^9; judged `weak`, now removed.)
+    * (A driver-side concurrent map here would be correct at 150
+    * users and a driver OOM at 10^9.)
     */
   case class UserAgg(user_id: Long, n_events: Long, total_value: Double)
 

@@ -17,7 +17,7 @@ import java.nio.file.Files
   */
 object TempDirs {
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[String, File]()
+  private val registry = scala.collection.concurrent.TrieMap.empty[String, File]
   private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   def deleteRecursively(f: File): Unit = {
@@ -34,12 +34,11 @@ object TempDirs {
   def scratch(prefix: String): String = {
     if (hookInstalled.compareAndSet(false, true)) {
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        registry.values().forEach(deleteRecursively(_))
+        registry.values.foreach(deleteRecursively)
       }))
     }
     val dir = Files.createTempDirectory(prefix).toFile
-    val prev = registry.put(prefix, dir)
-    if (prev != null) deleteRecursively(prev)
+    registry.put(prefix, dir).foreach(deleteRecursively)
     dir.toString
   }
 }

@@ -39,6 +39,24 @@ if missing:
 print(f"EXPLAINS.md fresh: {len(pinned)} pinned, all dumped")
 EOF
 
+echo "== [3d/5] memo-map freshness (PERF.md lists exactly the SessionMemo families) =="
+python3 - <<'EOF'
+import glob, re, sys
+declared = set()
+for path in glob.glob("src/main/scala/**/*.scala", recursive=True):
+    if not path.endswith("util/SessionMemo.scala"):
+        declared |= set(re.findall(r'new SessionMemo\[.*?\]\(\s*"(\w+)"\s*\)',
+                                   open(path).read(), re.S))
+perf = open("PERF.md").read()
+section = perf.split("### Memo dependency map", 1)[1].split("\n### ", 1)[0]
+listed = set(re.findall(r'^\| `(\w+)`', section, re.M))
+missing, stale = declared - listed, listed - declared
+if missing or stale:
+    print(f"STALE memo map: missing from PERF.md {sorted(missing)}, no such family {sorted(stale)}")
+    sys.exit(1)
+print(f"memo map fresh: {len(declared)} SessionMemo families, all listed")
+EOF
+
 if [[ "${1:-}" == "--sweep" ]]; then
   echo "== [4/5] cross-scale Verify + check @ sf0.1 =="
   SPARK_GRAFT_CPUS=16 tools/run.sh graft.Verify /root/testdata/sf0.1 /tmp/gate_sf01
