@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 import graft.operators.{TextAnalysis => TA}
 
 /** Dataset-curation operators for a large-scale training-data
@@ -933,7 +934,7 @@ object Curation {
     (0 until c.levels).foreach { lvl =>
       r = r.union(
         r.join(n, Seq("w", "pos")).select(col("w"), col("next").as("pos")))
-        .localCheckpoint()
+        .cut()
       // both r (union tree) and n (self-join tree) double in plan
       // size per level, so truncate lineage EVERY level (r14): the
       // frames are type-frame-sized while the untruncated plan tree
@@ -948,9 +949,9 @@ object Curation {
             col("a.w") === col("b.w") && col("a.next") === col("b.pos"))
           .select(col("a.w").as("w"), col("a.pos").as("pos"),
             col("b.next").as("next"))
-          .localCheckpoint()
+          .cut()
     }
-    val out = fold(r, ml).localCheckpoint(true)
+    val out = fold(r, ml).cut()
     ml.unpersist()
     out
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Deduplication operators for training-data pipelines — the full
   * ladder from exact to semantic near-dup. The reference engine has no
@@ -267,36 +268,33 @@ object Dedup {
     * edges + one hash aggregate + one node-frame self-join; lineage
     * truncated per round so plans stay flat; only the per-round
     * change COUNT reaches the driver.
-    * Truncation is `localCheckpoint` (executor memory) by default —
-    * pass `checkpointDir` on a real cluster to write round snapshots
-    * to reliable storage instead (survives executor loss; the
-    * localCheckpoint variant recomputes-from-nothing if an executor
-    * holding a block dies mid-algorithm). Output: (id, cluster) for
-    * every id present in `pairs`, cluster = min id of the component.
+    * Truncation is [[graft.util.Lineage]]'s `cut`: `localCheckpoint`
+    * (executor memory) by default — set `spark.checkpoint.dir` on a
+    * real cluster to write round snapshots to reliable storage instead
+    * (survives executor loss; the localCheckpoint variant recomputes-
+    * from-nothing if an executor holding a block dies mid-algorithm).
+    * Output: (id, cluster) for every id present in `pairs`, cluster =
+    * min id of the component.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    // LAZY local checkpoint in single-JVM mode: the round's change
-    // count is then the job that materializes the snapshot — one job
-    // per round instead of two (eager materialize + count), which
-    // halves the per-round scheduling floor on small graphs. Reliable
-    // checkpoints (cluster mode) stay eager: durability of the round
-    // snapshot matters more than driver latency there.
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(_) => truncator(pairs, checkpointDir)
-      case None    => df => df.localCheckpoint(false)
-    }
-    val edges = cut(pairs
+                          maxIters: Int = 20): DataFrame = {
+    // LAZY cut: the round's change count is then the job that
+    // materializes the local snapshot — one result job per round
+    // instead of two (eager materialize + count), which cuts the
+    // per-round scheduling floor on small graphs. Reliable cuts
+    // (cluster mode) stay eager: durability of the round snapshot
+    // matters more than driver latency there.
+    val edges = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct())
+      .distinct().cut(eager = false)
     // round-0 init folded into the edge scan: label = min(self, all
     // neighbors) — exactly the first propagation round, one agg
     // cheaper than the join form (edges carry every node as a src
     // because the edge set is symmetrized above)
-    var labels = cut(edges.groupBy(col("src")).agg(min(col("dst")).as("nd"))
-      .select(col("src").as("id"), least(col("src"), col("nd")).as("cluster")))
+    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("nd"))
+      .select(col("src").as("id"), least(col("src"), col("nd")).as("cluster"))
+      .cut(eager = false)
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
@@ -313,35 +311,19 @@ object Dedup {
       // the remaining label-tree depth per round (a second jump per
       // round measured net-negative: the extra join costs more than
       // the rounds it saves at the gate's job-latency floor)
-      val next = cut(hop
+      val next = hop
         .join(hop.select(col("id").as("cluster"), col("cluster").as("pc")),
           Seq("cluster"), "left_outer")
         .select(col("id"),
           least(col("cluster"), coalesce(col("pc"), col("cluster"))).as("cluster"),
-          (col("ch") || (col("pc") < col("cluster"))).as("ch")))
+          (col("ch") || (col("pc") < col("cluster"))).as("ch"))
+        .cut(eager = false)
       changed = next.filter(col("ch")).count()
       labels = next.select(col("id"), col("cluster"))
       iter += 1
     }
     labels
   }
-
-  /** Per-round lineage truncation for the iterative CC algorithms:
-    * eager `localCheckpoint` by default (single-JVM / tests), eager
-    * reliable `checkpoint` under `dir` when given (cluster mode —
-    * snapshots live in HDFS/S3, so a lost executor costs one re-read,
-    * not a full recompute of all prior rounds). The checkpoint dir is
-    * set once per call; each truncated frame lands in its own rdd-N
-    * subdirectory. */
-  private def truncator(sample: DataFrame,
-                        dir: Option[String]): DataFrame => DataFrame =
-    dir match {
-      case Some(d) =>
-        sample.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None =>
-        df => df.localCheckpoint(true)
-    }
 
   /** INCREMENTAL connected components — fold a DELTA edge batch into a
     * standing labeling without rescanning the standing EDGE set (the
@@ -366,7 +348,7 @@ object Dedup {
       aCol: String, bCol: String,
       baseLabels: Option[DataFrame] = None): DataFrame = {
     val base = baseLabels.getOrElse(connectedComponents(standing, aCol, bCol))
-      .localCheckpoint(true) // two consumers below; also truncates CC lineage
+      .cut() // two consumers below; also truncates CC lineage
     val d = delta.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"))
     val mapped = d
@@ -404,20 +386,18 @@ object Dedup {
     * fixpoint (every edge then points child → component root).
     */
   def connectedComponentsAlternating(pairs: DataFrame, aCol: String,
-                                     bCol: String, maxIters: Int = 30,
-                                     checkpointDir: Option[String] = None): DataFrame = {
-    val cut = truncator(pairs, checkpointDir)
+                                     bCol: String, maxIters: Int = 30): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct()
-    val ids = cut(pairs
+    val ids = pairs
       .select(col(aCol).cast("long").as("id"))
       .union(pairs.select(col(bCol).cast("long").as("id")))
-      .distinct())
-    var edges = cut(canon(pairs.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))))
+      .distinct().cut()
+    var edges = canon(pairs.select(col(aCol).cast("long").as("u"),
+        col(bCol).cast("long").as("v"))).cut()
     var edgeCount = edges.count()
     var iter = 0
     var done = false
@@ -436,10 +416,10 @@ object Dedup {
       val parents = bidir2.filter(col("n") <= col("c"))
       val mins2 = parents.groupBy(col("c"))
         .agg(least(min(col("n")), first(col("c"))).as("m"))
-      val ss = cut(canon(
+      val ss = canon(
         parents.join(mins2, Seq("c"))
           .select(col("n").as("u"), col("m").as("v"))
-          .union(mins2.select(col("c").as("u"), col("m").as("v")))))
+          .union(mins2.select(col("c").as("u"), col("m").as("v")))).cut()
       // fixpoint = set equality; both sides are canon'd (distinct), so
       // |ss| == |edges| plus ss ⊆ edges suffices. One count over the
       // just-checkpointed ss (carried to the next round as edgeCount)

@@ -2,13 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Distributed graph algorithms beyond connected components
   * ([[Dedup.connectedComponents]]). Same scale discipline: per-round
   * shuffles carry (8-byte id, 8-byte value) pairs only, lineage is
   * truncated per round, and only O(1) counters reach the driver.
+  * Every truncation is [[graft.util.Lineage]]'s `cut`: local by
+  * default, reliable snapshots (rdd-N dirs that survive executor loss)
+  * when `spark.checkpoint.dir` is set on a real cluster.
   */
 object Graph {
+
+  /** Rounds between lineage cuts in the fixed-iteration loops that take
+    * no mid-loop action (the GraphX/Pregel checkpoint interval). */
+  private val CutEvery = 5
 
   /** Fixed-iteration PageRank in EXACT fixed-point integer arithmetic.
     *
@@ -34,29 +42,19 @@ object Graph {
     * ACTION (the convergence count) and therefore must truncate every
     * round — this loop runs a fixed number of rounds with no
     * mid-loop action, so ranks are truncated only every
-    * `checkpointInterval` rounds (the GraphX/Pregel convention): short
+    * `CutEvery` rounds (the GraphX/Pregel convention): short
     * chains evaluate as ONE fused DAG (measured 5.5 → ~2 s for 3
     * rounds at sf0.1), long chains stay bounded in plan depth.
-    * Truncation is `localCheckpoint`, or reliable `checkpoint(dir)`
-    * under `checkpointDir` on a cluster — same contract as
-    * [[Dedup.connectedComponents]]. Only N (a count) reaches the
-    * driver. Returns (id, rank_fx) for every node.
+    * Only N (a count) reaches the driver. Returns (id, rank_fx) for
+    * every node.
     */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                    iters: Int = 3, scale: Long = 1000000000L,
-                    checkpointDir: Option[String] = None,
-                    checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+                    iters: Int = 3, scale: Long = 1000000000L): DataFrame = {
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+      .distinct().cut()
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct().cut()
     val n = nodes.count()
     require(n > 0, "empty graph")
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -72,7 +70,7 @@ object Graph {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(base) + expr(s"(85 * coalesce(cs, 0L)) div 100")).as("r"))
-      ranks = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
+      ranks = if (k % CutEvery == 0 && k < iters) next.cut() else next
     }
     ranks.select(col("id"), col("r").as("rank_fx"))
   }
@@ -120,18 +118,16 @@ object Graph {
     * frame: per round one edges⋈x hash join + one partial-aggregated
     * groupBy(dst) + a left join to the node frame — (id, long)
     * exchanges only; no mid-loop action, lineage truncated every
-    * `checkpointInterval` rounds. Returns (id, katz_fx) per node.
+    * `CutEvery` rounds. Returns (id, katz_fx) per node.
     */
   def katzFixed(edges: DataFrame, srcCol: String, dstCol: String,
                 iters: Int = 3, alphaDen: Long = 1000L,
-                scale: Long = 1000000L,
-                checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = df => df.localCheckpoint(true)
-    val e = cut(edges
+                scale: Long = 1000000L): DataFrame = {
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+      .distinct().cut()
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct().cut()
     var x = nodes.select(col("id"), lit(scale).as("r"))
     for (k <- 1 to iters) {
       val contrib = e
@@ -142,7 +138,7 @@ object Graph {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(scale) + expr(s"coalesce(cs, 0L) div $alphaDen")).as("r"))
-      x = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
+      x = if (k % CutEvery == 0 && k < iters) next.cut() else next
     }
     x.select(col("id"), col("r").as("katz_fx"))
   }
@@ -151,18 +147,17 @@ object Graph {
                                 srcCol: String, dstCol: String,
                                 seedCol: String, iters: Int = 3,
                                 scale: Long = 1000000000L): DataFrame = {
-    val cut: DataFrame => DataFrame = df => df.localCheckpoint(true)
-    val e = cut(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
+      .distinct().cut()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val sd = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .join(nodes, "id")
     // node frame with a 0/1 seed flag — the only per-node state
-    val nb = cut(nodes
+    val nb = nodes
       .join(sd.withColumn("seed", lit(1L)), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("seed"), lit(0L)).as("seed")))
+      .select(col("id"), coalesce(col("seed"), lit(0L)).as("seed")).cut()
     val s = nb.agg(sum(col("seed"))).collect()(0).getLong(0)
     require(s > 0, "no seed is present in the graph")
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -350,22 +345,14 @@ object Graph {
     */
   def pageRankWeightedFixed(edges: DataFrame, srcCol: String, dstCol: String,
                             weightCol: String, iters: Int = 3,
-                            scale: Long = 1000000000L,
-                            checkpointDir: Option[String] = None,
-                            checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+                            scale: Long = 1000000000L): DataFrame = {
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0))
-    val nodes = cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+      .filter(col("w") > 0).cut()
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct().cut()
     val n = nodes.count()
     require(n > 0, "empty graph")
     val wsum = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
@@ -381,7 +368,7 @@ object Graph {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(base) + expr(s"(85 * coalesce(cs, 0L)) div 100")).as("r"))
-      ranks = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
+      ranks = if (k % CutEvery == 0 && k < iters) next.cut() else next
     }
     ranks.select(col("id"), col("r").as("rank_fx"))
   }
@@ -407,20 +394,13 @@ object Graph {
     * long pairs only; lineage truncated between rounds.
     */
   def hitsFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                rounds: Int = 2, scale: Long = 1000000L,
-                checkpointDir: Option[String] = None): DataFrame = {
+                rounds: Int = 2, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+      .distinct().cut()
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct().cut()
     var hub = nodes.select(col("id"), lit(1L).as("h"))
     var auth = nodes.select(col("id"), lit(0L).as("a"))
     for (r <- 1 to rounds) {
@@ -438,7 +418,7 @@ object Graph {
       val hmax = hFull.agg(greatest(max(col("h")), lit(1L)).as("mx"))
       hub = hFull.crossJoin(broadcast(hmax))
         .select(col("id"), expr(s"(h * $scale) div mx").as("h"))
-      if (r < rounds) { hub = cut(hub); auth = cut(auth) }
+      if (r < rounds) { hub = hub.cut(); auth = auth.cut() }
     }
     hub.join(auth, Seq("id"))
       .select(col("id"), col("h").as("hub_fx"), col("a").as("auth_fx"))
@@ -462,19 +442,12 @@ object Graph {
     */
   def ssspFixed(edges: DataFrame, srcCol: String, dstCol: String,
                 weightCol: String, sources: DataFrame, idCol: String,
-                rounds: Int = 3,
-                checkpointDir: Option[String] = None): DataFrame = {
+                rounds: Int = 3): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")).cut()
     var dist = sources.select(col(idCol).cast("long").as("id"), lit(0L).as("d"))
     for (r <- 1 to rounds) {
       val relax = e
@@ -482,7 +455,7 @@ object Graph {
         .select(col("dst").as("id"), (col("d") + col("w")).as("d"))
       val next = dist.unionByName(relax)
         .groupBy(col("id")).agg(min(col("d")).as("d"))
-      dist = if (r % 2 == 0 && r < rounds) cut(next) else next
+      dist = if (r % 2 == 0 && r < rounds) next.cut() else next
     }
     dist.select(col("id"), col("d").as("dist"))
   }
@@ -510,32 +483,25 @@ object Graph {
     * within `maxHops` of a seed (seeds at dist 0).
     */
   def bfsLevels(edges: DataFrame, sources: DataFrame, srcCol: String,
-                dstCol: String, idCol: String, maxHops: Int = 8,
-                checkpointDir: Option[String] = None): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+                dstCol: String, idCol: String, maxHops: Int = 8): DataFrame = {
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    var dist = cut(sources.select(col(idCol).cast("long").as("id")).distinct()
-      .select(col("id"), lit(0).as("dist")))
+      .distinct().cut()
+    var dist = sources.select(col(idCol).cast("long").as("id")).distinct()
+      .select(col("id"), lit(0).as("dist")).cut()
     var frontier = dist
     var k = 0
     var done = false
     while (k < maxHops && !done) {
       k += 1
-      val next = cut(frontier
+      val next = frontier
         .join(e, frontier("id") === e("src"))
         .select(col("dst").as("id")).distinct()
         .join(dist, Seq("id"), "left_anti")
-        .select(col("id"), lit(k).as("dist")))
+        .select(col("id"), lit(k).as("dist")).cut()
       if (next.isEmpty) done = true
       else {
-        dist = cut(dist.union(next))
+        dist = dist.union(next).cut()
         frontier = next
       }
     }
@@ -556,9 +522,8 @@ object Graph {
     * memory/DAG knob: at 100 TB you pick k ≈ 16-64 pivots (the
     * estimator's error is O(1/√k), independent of graph size) and the
     * whole sweep costs k× one BFS's shuffle bytes but the SAME number
-    * of rounds. Lineage truncated per round (localCheckpoint / the
-    * caller's reliable checkpoint dir) — the unbounded-iterative-DAG
-    * rule every fixpoint operator here follows.
+    * of rounds. Lineage truncated per round — the unbounded-
+    * iterative-DAG rule every fixpoint operator here follows.
     *
     * Directed by construction (union reversed edges for undirected).
     * Hop-capped like [[bfsLevels]], so a bounded recursive-CTE oracle
@@ -566,32 +531,25 @@ object Graph {
     * pivot itself, one row per (pivot, node) within `maxHops`.
     */
   def multiSourceBfs(edges: DataFrame, pivots: DataFrame, srcCol: String,
-                     dstCol: String, idCol: String, maxHops: Int = 4,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+                     dstCol: String, idCol: String, maxHops: Int = 4): DataFrame = {
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    var dist = cut(pivots.select(col(idCol).cast("long").as("pivot")).distinct()
-      .select(col("pivot"), col("pivot").as("id"), lit(0).as("dist")))
+      .distinct().cut()
+    var dist = pivots.select(col(idCol).cast("long").as("pivot")).distinct()
+      .select(col("pivot"), col("pivot").as("id"), lit(0).as("dist")).cut()
     var frontier = dist
     var k = 0
     var done = false
     while (k < maxHops && !done) {
       k += 1
-      val next = cut(frontier
+      val next = frontier
         .join(e, frontier("id") === e("src"))
         .select(col("pivot"), col("dst").as("id")).distinct()
         .join(dist, Seq("pivot", "id"), "left_anti")
-        .select(col("pivot"), col("id"), lit(k).as("dist")))
+        .select(col("pivot"), col("id"), lit(k).as("dist")).cut()
       if (next.isEmpty) done = true
       else {
-        dist = cut(dist.union(next))
+        dist = dist.union(next).cut()
         frontier = next
       }
     }
@@ -625,18 +583,11 @@ object Graph {
     * because every vertex has in-edges).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int = 2,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       rounds: Int = 2): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val e = cut(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
+      .distinct().cut()
     var labels = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .select(col("id"), col("id").as("lab"))
@@ -665,7 +616,7 @@ object Graph {
       // an uncut round's vote aggregate re-executes inside the next
       // round's plan: one full edge-sized aggregate wasted per uncut
       // round for the price of a node-sized checkpoint write.
-      labels = if (r < rounds) cut(next) else next
+      labels = if (r < rounds) next.cut() else next
     }
     labels
   }
@@ -697,20 +648,13 @@ object Graph {
     * that justified keeping them — ≥ k by construction).
     */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int = 4,
-                checkpointDir: Option[String] = None): DataFrame = {
+                k: Int, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val und = cut(edges
+    val und = edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
+      .distinct().cut()
     var alive = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
     var result: DataFrame = null
@@ -724,7 +668,7 @@ object Graph {
         .filter(col("deg") >= k)
       result = deg
       alive = deg.select(col("id"))
-      if (r % 2 == 0 && r < rounds) { alive = cut(alive) }
+      if (r % 2 == 0 && r < rounds) { alive = alive.cut() }
     }
     result
   }
@@ -813,9 +757,9 @@ object Graph {
     require(rounds >= 1)
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().localCheckpoint(true)
+      .distinct().cut()
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("k"))
-      .localCheckpoint(true) // node-sized, probed every round
+      .cut() // node-sized, probed every round
     val ddRow = e.agg(count(lit(1)).as("dd"))
     // r14: labels is referenced FOUR times per round (tot, kic, stay,
     // move) and kic twice (stay, move) — un-truncated, each reference
@@ -828,7 +772,7 @@ object Graph {
     var labels = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .select(col("id"), col("id").as("lab"))
-      .localCheckpoint(true)
+      .cut()
     for (r <- 1 to rounds) {
       val tot = labels.join(deg, "id").groupBy(col("lab"))
         .agg(sum(col("k")).as("sigma"))
@@ -836,7 +780,7 @@ object Graph {
         .join(labels.select(col("id").as("dst"), col("lab").as("clab")), "dst")
         .groupBy(col("src").as("id"), col("clab"))
         .agg(count(lit(1)).as("kic"))
-        .localCheckpoint(false)
+        .cut(eager = false)
       // candidate rows: the current community (k_{i,cur} looked up,
       // 0 when i has no neighbor at home) ∪ every neighbor community
       val stay = labels.as("l")
@@ -861,7 +805,7 @@ object Graph {
       val next = scored.groupBy(col("id"))
         .agg(max(struct(col("score"), (-col("clab")).as("nc"))).as("m"))
         .select(col("id"), (-col("m.nc")).as("lab"))
-      labels = if (r < rounds) next.localCheckpoint(true) else next
+      labels = if (r < rounds) next.cut() else next
     }
     labels
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -566,7 +567,7 @@ object Similarity {
       .select(col("id"), col("nv"),
         transform(col("nv"),
           x => floor(x.cast("double") * lit(1e6)).cast("double")).as("f"))
-      .localCheckpoint(eager = true) // feeds grids×2 join sides + training
+      .cut() // feeds grids×2 join sides + training
     // `grids` independently-seeded trained quantizers: a ≥θ pair missed
     // by one grid's cell split is caught by another (the knnGraphDescent
     // multi-grid recall trick — measured: 1 grid keeps ~0.18 of true
@@ -586,7 +587,7 @@ object Similarity {
       col("id") +: col("f") +:
         (0 until grids).map(g => graft.functions.VectorFunctions
           .vec_mat_argmax(col("nv"), cents(g)).as(s"c$g")): _*)
-      .localCheckpoint(eager = true)
+      .cut()
     // per-grid census: a hash AGGREGATE over the checkpointed
     // assignment (sort-free, rule 17); overfull cells are collected
     // (≤ numCells rows — model-sized), REPORTED through onCensus (no
@@ -625,7 +626,7 @@ object Similarity {
         .filter(firstFinder)
         .filter(dotD(col("fa"), col("fb")) >= lit(thetaFx.toDouble))
         .select(col("ia"), col("ib"))
-        .localCheckpoint(eager = true)
+        .cut()
     }
   }
 
@@ -850,7 +851,7 @@ object Similarity {
       else math.max(16, (data.count() / 2000L).toInt)
     val base = data
       .select(col(idCol).as("id"), normalized(col(vecCol)).as("v"))
-      .localCheckpoint(eager = true) // reused 2(rounds+1)+grids times
+      .cut() // reused 2(rounds+1)+grids times
     val byRank = Window.partitionBy(col("src"))
       .orderBy(desc("cos"), asc("dst"))
     // exact-score a candidate pair set and keep each src's top-k
@@ -897,7 +898,7 @@ object Similarity {
       .select(col("src"), col("dst"),
         col("rank").cast("long").as("rank"), col("cos").as("cosine"))
     val out = Seq.newBuilder[DataFrame]
-    var scored = topK(init).localCheckpoint(eager = false)
+    var scored = topK(init).cut(eager = false)
     out += publish(scored)
     for (_ <- 1 to rounds) {
       // DESCENT round: candidates = neighbors-of-neighbors over the
@@ -917,7 +918,7 @@ object Similarity {
         .select(col("src"), col("dst"))
         .union(und)
         .distinct()
-      scored = topK(cand).localCheckpoint(eager = false)
+      scored = topK(cand).cut(eager = false)
       out += publish(scored)
     }
     out.result()
@@ -1134,7 +1135,7 @@ object Similarity {
         // checkpoint is purely an efficiency choice: it stops the
         // m × iters training jobs each re-scanning candidates and
         // re-deriving argmax cells + residuals from the raw vectors.
-        val resid = encBase.select(col("ev")).localCheckpoint(true)
+        val resid = encBase.select(col("ev")).cut()
         pqTrainCodebooks(resid, "ev", m, ksub, dim, iters,
           preNormalized = true)
       } else pqTrainCodebooks(candidates, vecC, m, ksub, dim, iters)
@@ -1244,7 +1245,7 @@ object Similarity {
       .select(col("id"),
         transform(col("v"),
           x => floor(x / col("m") * lit(127.0)).cast("double")).as("qv"))
-      .localCheckpoint(true)
+      .cut()
     def centerLit(qv: Seq[Double]) = array(qv.map(lit(_)): _*)
     def d2(c: Column) =
       vec_dot(vec_sub(col("qv"), c), vec_sub(col("qv"), c)).cast("long")

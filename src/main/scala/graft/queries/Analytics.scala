@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 import org.apache.spark.sql.types._
 
 /** Beyond-reference analytics over the `events` table (SURVEY.md §2.8,
@@ -858,7 +859,7 @@ object Analytics {
     val daily = graft.sources.Events.ev(spark, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .localCheckpoint(true) // tiny; two levels re-read it
+      .cut() // tiny; two levels re-read it
     def splits(df: DataFrame): DataFrame = {
       val wOrd = Window.partitionBy(col("seg")).orderBy(asc("day"))
       val wAll = Window.partitionBy(col("seg"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation => C, TextAnalysis => TA}
+import graft.util.Lineage._
 import graft.util.SessionMemo
 
 /** Dataset-curation queries (q57-q63): the train-time data-management
@@ -1028,7 +1029,7 @@ object Curation {
     // (doc, tok), |n·ll| ≤ 1e6·2e7 ≪ 2^63.
     val dtoks = toks.groupBy(col("doc_id"), col("source"), col("tok"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .cut()
     val ct = dtoks.groupBy(col("source").as("cls"), col("tok"))
       .agg(sum(col("n")).as("n_ct"))
     val cTot = ct.groupBy(col("cls")).agg(sum(col("n_ct")).as("n_c"))
@@ -1272,7 +1273,7 @@ object Curation {
   private def winnowFpsOf(spark: SparkSession, dir: String): DataFrame =
     winnowFps(spark, dir) {
       C.winnowFingerprints(docs(spark, dir), "doc_id", "text",
-        k = 4, w = 5).localCheckpoint(eager = true)
+        k = 4, w = 5).cut()
     }
 
   def q227Winnow(spark: SparkSession, dir: String): DataFrame =
@@ -1498,7 +1499,7 @@ object Curation {
       : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) =
     bpeFullTrain(spark, dir) {
       val (stats, syms) = C.bpeTrainFull(docs(spark, dir), "text", rounds = 3)
-      val cut = syms.localCheckpoint(true)
+      val cut = syms.cut()
       syms.unpersist()
       (stats, cut)
     }
@@ -1635,7 +1636,7 @@ object Curation {
         docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)
-      val cut = segs.localCheckpoint(true)
+      val cut = segs.cut()
       segs.unpersist()
       cut
     }
@@ -1814,8 +1815,7 @@ object Curation {
     * production train-once/ship-frozen shape; both halves are
     * deterministic in (dir), so the memo only ever skips a
     * bit-identical recompute. Orbit output is already eagerly
-    * checkpointed inside the build (unigramOrbit localCheckpoint(true)s
-    * its fold). */
+    * checkpointed inside the build (unigramOrbit cuts its fold). */
   private val uniStarts97 = new SessionMemo[DataFrame]("unigramStarts97Of")
   private def unigramStarts97Of(spark: SparkSession, dir: String): DataFrame =
     uniStarts97(spark, dir) {
@@ -2061,7 +2061,7 @@ object Curation {
         docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)
-      val cut = segs.localCheckpoint(true)
+      val cut = segs.cut()
       segs.unpersist()
       cut
     }

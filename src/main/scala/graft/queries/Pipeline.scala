@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph, Multimodal, Similarity, TextAnalysis => TA}
+import graft.util.Lineage._
 import graft.util.SessionMemo
 
 /** Training-data pipeline queries: text analysis, dedup, similarity
@@ -2406,7 +2407,7 @@ object Pipeline {
       .select(col("trunc_dim"), col("n_queries"), col("n_queries_hit"),
         col("n_hits"), col("recall_fx"))
       .orderBy(asc("trunc_dim"))
-      .localCheckpoint(true)
+      .cut()
     pairs.unpersist()
     r
   }
@@ -2689,7 +2690,7 @@ object Pipeline {
   private def phashOf(spark: SparkSession, dir: String): DataFrame =
     phashCache(spark, dir) {
       Multimodal.phashTable(Multimodal.mediaTable(spark, dir)).toDF()
-        .localCheckpoint(eager = true)
+        .cut()
     }
 
   // memoized per-grid DISJOINT dbscan survivor-pair frames (r14):
@@ -2787,7 +2788,7 @@ object Pipeline {
       val ref = refRaw.select(col("vec_id").as("rid"),
           vec_mat_argmax(Similarity.normalized(col("embedding")), cents).as("cell"),
           floored(col("embedding")).as("rv"))
-        .localCheckpoint(eager = true) // shared by the cal and test branches
+        .cut() // shared by the cal and test branches
       def nnIvf(points: DataFrame): DataFrame = {
         val qb = points.select(col("vec_id"),
           Similarity.normalized(col("embedding")).as("nvq"),
@@ -2805,9 +2806,9 @@ object Pipeline {
           .select(col("vec_id"), coalesce(col("nn0"), lit(-1e14)).as("nn"))
       }
       val cal = nnIvf(e.filter(pmod(col("vec_id"), lit(mCal)) === 1))
-        .localCheckpoint(eager = true)
+        .cut()
       val test = nnIvf(e.filter(pmod(col("vec_id"), lit(4)) === 3))
-        .localCheckpoint(eager = true)
+        .cut()
       (cal, test)
     }
 
@@ -4084,7 +4085,7 @@ object Pipeline {
           (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
         .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
           .cast("long")).as("w"))
-        .localCheckpoint(true)
+        .cut()
     }
   private def tradeFwdOf(spark: SparkSession, dir: String): DataFrame =
     tradeRelWOf(spark, dir).select(col("src"), col("dst"))
@@ -4148,12 +4149,12 @@ object Pipeline {
     // adjacency and rebuilt the degree aggregate: 23 s → ~3 s at
     // sf0.1)
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("src", "cur").localCheckpoint(true)
+      .withColumnRenamed("src", "cur").cut()
     var frontier = adj.select(col("src").as("id")).distinct()
       .filter(pmod(col("id"), lit(29)) === 0)
       .select(col("id"), explode(array(lit(0L), lit(1L))).as("r"))
       .select((col("id") * 2 + col("r")).as("walk_id"), col("id").as("cur"))
-      .localCheckpoint(true)
+      .cut()
     val segs = scala.collection.mutable.ArrayBuffer[DataFrame](
       frontier.select(col("walk_id"), lit(0L).as("step"),
         col("cur").as("node")))
@@ -4170,11 +4171,11 @@ object Pipeline {
           col("dst").as("nxt"))
         .join(broadcast(fr), Seq("cur", "nidx"))
         .select(col("walk_id"), col("nxt").as("cur"))
-        .localCheckpoint(true)
+        .cut()
       segs += frontier.select(col("walk_id"), lit(t.toLong).as("step"),
         col("cur").as("node"))
     }
-    val out = segs.reduce(_ union _).localCheckpoint(true)
+    val out = segs.reduce(_ union _).cut()
     adj.unpersist()
     out
   }
@@ -4290,7 +4291,7 @@ object Pipeline {
   private def lpaLabelsOf(spark: SparkSession, dir: String): DataFrame =
     lpaCache(spark, dir) {
       Graph.labelPropagation(tradeEdges(spark, dir), "src", "dst", rounds = 2)
-        .localCheckpoint(true)
+        .cut()
     }
 
   def q177LabelProp(spark: SparkSession, dir: String): DataFrame =

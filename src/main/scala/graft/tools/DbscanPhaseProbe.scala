@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Piecewise breakdown of the dbscanCellRoles ×N cost (rule 12: blame
   * by measurement, not narrative): training vs assignment vs the
@@ -31,7 +32,7 @@ object DbscanPhaseProbe {
       .select(col("id"), col("nv"),
         transform(col("nv"),
           x => floor(x.cast("double") * lit(1e6)).cast("double")).as("f"))
-      .localCheckpoint(eager = true)
+      .cut()
     val cents = (0 until 3).map { g =>
       timed(s"train grid $g (2 iters, $cells cells)")(
         Similarity.trainCentroids(base, "nv", cells, 2, 64, seed = 42L + 7L * g))

@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Reproducer for the concurrent-shared-lambda nondeterminism
   * (CLAUDE.md rule 17): training PQ codebooks over a frame whose plan
@@ -40,7 +41,7 @@ object DetProbe {
       println(s"j=$j sequential equal: " + (s1.map(_.toSeq).toSeq == s2.map(_.toSeq).toSeq))
     }
     // fix #1 (r6): materialize first, then concurrent training is stable
-    val mat = enc.localCheckpoint(true)
+    val mat = enc.cut()
     val m1 = Similarity.pqTrainCodebooks(mat, "ev", 8, 16, 64, 2, preNormalized = true)
     val m2 = Similarity.pqTrainCodebooks(mat, "ev", 8, 16, 64, 2, preNormalized = true)
     println("materialized concurrent books equal: " +

@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Isolated re-measurement of the round-7 graph stress phases (the
   * full ScaleStress harness carries 2-3× phase-order noise — PERF
@@ -21,7 +22,7 @@ object GraphStressProbe {
         explode(array((0 until edgesPerV).map(i =>
           pmod(xxhash64(col("id"), lit(i + 100)),
             lit(if (i == 0) 1024L else n))): _*)).as("dst"))
-      .repartition(32).localCheckpoint(true)
+      .repartition(32).cut()
     val m = edges.count()
     def timed(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Recall sweep for [[graft.operators.Similarity.knnGraphDescent]]'s
   * bounded-init parameters (rule 9/14: floors are re-measured, never
@@ -20,7 +21,7 @@ object KnnProbe {
     val exact = graft.operators.Similarity.bruteForceTopK(
         emb, emb, "vec_id", "vec_id", "embedding", "embedding", 10)
       .select(col("query_id").as("src"), col("cand_id").as("dst"))
-      .localCheckpoint(eager = true)
+      .cut()
     val total = exact.count()
     for (w <- widths) {
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** q261 plan-fix probe (round 10, verdict item 1).
   *
@@ -64,9 +65,9 @@ object Q261Probe {
         val edges = pairs
           .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
           .union(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-          .distinct().localCheckpoint(true)
+          .distinct().cut()
         var labels = edges.select(col("src").as("id")).distinct()
-          .withColumn("cluster", col("id")).localCheckpoint(true)
+          .withColumn("cluster", col("id")).cut()
         var iter = 0
         var changed = 1L
         while (changed > 0 && iter < 20) {
@@ -85,7 +86,7 @@ object Q261Probe {
             .select(col("id"),
               least(col("cluster"), coalesce(col("pc"), col("cluster"))).as("cluster"),
               (col("ch") || (col("pc") < col("cluster"))).as("ch"))
-            .localCheckpoint(true)
+            .cut()
           changed = next.filter(col("ch")).count()
           labels = next.select(col("id"), col("cluster"))
           iter += 1

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Round-14 stage-attribution probes (rule 12/13: blame by
   * measurement in an isolated fresh JVM, never narrative) for the
@@ -40,7 +41,7 @@ object R14Q233Probe {
     import graft.operators.{Curation => C}
     val fps = timed("phase 1: winnowFingerprints + distinct (full corpus)") {
       val f = C.winnowFingerprints(d, "doc_id", "text", k = 4, w = 5)
-        .select(col("doc_id"), col("fp")).distinct().localCheckpoint(true)
+        .select(col("doc_id"), col("fp")).distinct().cut()
       println("  fps rows: " + f.count()); f
     }
     val pairs = timed("phase 2: df filter + fp self-join -> pairs") {
@@ -52,14 +53,14 @@ object R14Q233Probe {
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 3).localCheckpoint(true)
+        .filter(col("n_shared") >= 3).cut()
       println("  pairs: " + p.count()); p
     }
     val grams = timed("phase 3: positionalGrams over participating docs") {
       val docsIn = pairs.select(col("doc_a").as("doc_id"))
         .union(pairs.select(col("doc_b"))).distinct()
       val g = C.positionalGrams(d.join(docsIn, "doc_id"),
-        "doc_id", "text", k = 4).localCheckpoint(true)
+        "doc_id", "text", k = 4).cut()
       println("  gram rows: " + g.count()); g
     }
     timed("phase 4: alignSharedRuns (pair join + runs + argmax)") {
@@ -82,24 +83,24 @@ object R14Q261Probe {
     import graft.operators.{Dedup, Multimodal}
     val ph = timed("phase 1: phashTable (decode + dhash)") {
       val p = Multimodal.phashTable(Multimodal.mediaTable(spark, dir)).toDF()
-        .select(col("media_id"), col("dhash")).localCheckpoint(true)
+        .select(col("media_id"), col("dhash")).cut()
       println("  media rows: " + p.count()); p
     }
     val reps = timed("phase 2: exact-hash collapse (reps)") {
       val r = ph.groupBy(col("dhash")).agg(min(col("media_id")).as("rep"))
-        .localCheckpoint(true)
+        .cut()
       println("  distinct hashes: " + r.count()); r
     }
     val pairs = timed("phase 3: signaturePairs (Hamming<=3 pigeonhole)") {
       val p = Dedup.signaturePairs(
           reps.select(col("rep").as("media_id"), col("dhash").as("sig")),
           "media_id", maxHamming = 3, maxBucket = 4096)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).cut()
       println("  rep pairs: " + p.count()); p
     }
     val cc = timed("phase 4: connectedComponents over rep pairs") {
       val c = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .localCheckpoint(true)
+        .cut()
       println("  cc rows: " + c.count()); c
     }
     timed("phase 5: keep-list join + canonical window") {
@@ -135,7 +136,7 @@ object R14Q208Probe {
       val r = o.join(l, col("o_orderkey") === col("l_orderkey"))
         .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
         .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
-          .cast("long")).as("w")).localCheckpoint(true)
+          .cast("long")).as("w")).cut()
       println("  rel rows: " + r.count()); r
     }
     timed("phase 2: ssspFixed 3 rounds (incl edge dedup cut)") {
@@ -167,7 +168,7 @@ object R14UnigramProbe {
       val t = d.select(explode(graft.operators.TextAnalysis
           .tokens(col("text"))).as("w"))
         .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("wc")).localCheckpoint(true)
+        .groupBy(col("w")).agg(count(lit(1)).as("wc")).cut()
       println("  types: " + t.count()); t
     }
     timed("phase 1b: per-char positions frame") {
@@ -268,7 +269,7 @@ object R14CcProbe {
     val pairs = Dedup.signaturePairs(
         reps.select(col("rep").as("media_id"), col("dhash").as("sig")),
         "media_id", maxHamming = 3, maxBucket = 4096)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
+      .select(col("id_a"), col("id_b")).cut()
     println("  pairs: " + pairs.count())
     for (i <- 1 to 2) {
       timed(s"min-label CC run $i")(

@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Measures q179's recall@10 with raw-vector vs residual (classic
   * IVFADC) PQ codes on the real gate corpus — the re-measurement the
@@ -26,7 +27,7 @@ object ResidualProbe {
       val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
       val exact = Similarity.bruteForceTopK(q, e, "vec_id", "vec_id",
           "embedding", "embedding", 10)
-        .select(col("query_id"), col("cand_id")).localCheckpoint(true)
+        .select(col("query_id"), col("cand_id")).cut()
       val nExact = exact.count()
       for (res <- Seq(false, true)) {
         val t0 = System.nanoTime()

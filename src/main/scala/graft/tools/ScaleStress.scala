@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Lineage._
 
 /** Scale-up stress: replicates the documents table N× (with distinct
   * ids and salted near-duplicate variants) and times the dedup ladder,
@@ -364,7 +365,7 @@ object ScaleStress {
     val knnG = graft.operators.Similarity.knnGraphDescent(emb, "vec_id",
         "embedding", k = 10, numCells = math.max(16, (nVec / 500L).toInt),
         dim = 64, grids = 2, rounds = 1)
-      .localCheckpoint(eager = false)
+      .cut(eager = false)
     timed(s"kNN graph via NN-descent ($nVec nodes, k=10, 2 grids + 1 round)")(
       knnG.count())
     timed(s"dsir weights ($total docs, top-512 vocab + OOV)")(
@@ -416,7 +417,7 @@ object ScaleStress {
       val longDocs = spark.range(20000)
         .select(col("id").as("doc_id"),
           concat_ws(" ", (junk ++ common): _*).as("text"))
-        .repartition(32).localCheckpoint(true)
+        .repartition(32).cut()
       val dt = longDocs
         .select(col("doc_id"),
           explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
@@ -489,7 +490,7 @@ object ScaleStress {
         .select(col("keep_id").as("doc_id"))
       val pairs = graft.operators.Dedup
         .minhashLshPairs(docs.join(keep, "doc_id"), "doc_id", "text", 3, 32, 8, 0.5)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).cut()
       graft.operators.Dedup.incrementalConnectedComponents(
         pairs.filter((col("id_a") + col("id_b")) % 5 =!= 0),
         pairs.filter((col("id_a") + col("id_b")) % 5 === 0),

@@ -15,16 +15,16 @@ import org.apache.spark.sql.SparkSession
   * private def phashOf(spark: SparkSession, dir: String): DataFrame =
   *   phash(spark, dir) {
   *     Multimodal.phashTable(Multimodal.mediaTable(spark, dir)).toDF()
-  *       .localCheckpoint(eager = true)
+  *       .cut()
   *   }
   * }}}
   *
   * It exists to enforce two hygiene rules in one place:
   *
   *  - the value is BUILT (and, for DataFrames, materialized — callers
-  *    localCheckpoint(true) or persist + count inside `build`) inside
-  *    the synchronized `computeIfAbsent`, so two driver threads can
-  *    never race the first materialization of a shared frame
+  *    take an eager [[Lineage]] `cut()` or persist + count inside
+  *    `build`) inside the synchronized `computeIfAbsent`, so two driver
+  *    threads can never race the first materialization of a shared frame
   *    (rule 16's hazard);
   *  - no entry outlives its session: ONE `onApplicationEnd` listener
   *    per session evicts that session from every family.

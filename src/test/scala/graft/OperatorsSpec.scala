@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.SparkInternals.{drainListeners, withCheckpointDir}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.util.Lineage._
 
 /** Specs for the pipeline operator modules: text analysis, dedup,
   * similarity, multimodal. Uses planted fixtures with known answers.
@@ -781,27 +785,81 @@ class OperatorsSpec extends SparkSpec {
     assert(viaAlt(12L) === 1L && viaAlt(51L) === 50L)
   }
 
-  test("CC with reliable checkpointDir matches localCheckpoint and writes snapshots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
-    val g = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L), (50L, 51L))
-      .toDF("a", "b")
-    val local = Dedup.connectedComponents(g, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = Dedup.connectedComponents(g, "a", "b", checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === local)
-    val altReliable = Dedup.connectedComponentsAlternating(g, "a", "b",
-        checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(altReliable === local)
-    // round snapshots actually landed in reliable storage (rdd-N dirs)
+  private val ckGraph = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L), (50L, 51L))
+
+  /** Runs each op without a checkpoint dir, then again under a reliable one:
+    * rows must match and each op's cuts must land as rdd-N snapshot dirs. */
+  private def assertReliableCutsMatchLocal(ops: Seq[(String, () => DataFrame)]): Unit = {
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     def rddDirs(f: java.io.File): Int =
       if (f.isDirectory)
         (if (f.getName.startsWith("rdd-")) 1 else 0) +
           Option(f.listFiles()).getOrElse(Array.empty).map(rddDirs).sum
       else 0
-    assert(rddDirs(new java.io.File(dir)) > 0)
-    graft.util.TempDirs.deleteRecursively(new java.io.File(dir))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val local = ops.map { case (name, op) => name -> rows(op()) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_graph_ck").toFile
+    try {
+      withCheckpointDir(dir.toString) {
+        ops.zip(local).foreach { case ((name, op), (_, want)) =>
+          val before = rddDirs(dir)
+          assert(rows(op()) === want, name)
+          // each operator's cuts landed in reliable storage (rdd-N dirs)
+          assert(rddDirs(dir) > before, name)
+        }
+      }
+    } finally graft.util.TempDirs.deleteRecursively(dir)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
+  test("CC with reliable checkpointDir matches localCheckpoint and writes snapshots") {
+    val g = ckGraph.toDF("a", "b")
+    assertReliableCutsMatchLocal(Seq(
+      "cc" -> (() => Dedup.connectedComponents(g, "a", "b")),
+      "ccAlternating" -> (() => Dedup.connectedComponentsAlternating(g, "a", "b"))))
+  }
+
+  test("graph operators under a reliable checkpoint dir match the local cut and write snapshots") {
+    val g = ckGraph.toDF("a", "b")
+    // pageRankFixed runs past Graph's 5-round cut interval, so its in-loop cut fires too
+    assertReliableCutsMatchLocal(Seq(
+      "pageRankFixed" -> (() => Graph.pageRankFixed(g, "a", "b", iters = 6)),
+      "hitsFixed" -> (() => Graph.hitsFixed(g, "a", "b", rounds = 3)),
+      "kCorePeel" -> (() => Graph.kCorePeel(g, "a", "b", k = 1, rounds = 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(g, "a", "b", rounds = 3))))
+  }
+
+  // Narrow plan on purpose: under AQE a lazy cut still runs the shuffle
+  // map stages of its plan at the call; only the result stage waits.
+  test("a lazy cut of a narrow frame submits no job until the first action reads it") {
+    val sc = spark.sparkContext
+    val group = "lineage-lazy-cut"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val source = spark.range(0, 1000, 1, 4).select((col("id") % 7).as("k"))
+      val lazyCut = source.cut(eager = false)
+      drainListeners(sc)
+      assert(jobs.get === 0)
+      // the first action is the one job that materializes the cut
+      assert(lazyCut.collect().count(_.getLong(0) == 0L) === 143)
+      drainListeners(sc)
+      assert(jobs.get === 1)
+      // contrast: an eager cut runs its job at the call
+      source.cut()
+      drainListeners(sc)
+      assert(jobs.get === 2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   // q75's rows-only gate is backed here: planted near-identical

@@ -57,6 +57,27 @@ if missing or stale:
 print(f"memo map fresh: {len(declared)} SessionMemo families, all listed")
 EOF
 
+echo "== [3e/5] one lineage cut (checkpoints only inside util/Lineage.scala) =="
+python3 - <<'EOF'
+import glob, re, sys
+# comments and string literals blanked (newlines kept for line numbers)
+noise = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|/\*[\s\S]*?\*/|//[^\n]*')
+call = re.compile(r'localCheckpoint\s*\(|\.checkpoint\s*\(|setCheckpointDir')
+hits = []
+for path in sorted(glob.glob("src/main/scala/**/*.scala", recursive=True)):
+    if path.endswith("util/Lineage.scala"):
+        continue
+    code = noise.sub(lambda m: "\n" * m.group(0).count("\n"), open(path).read())
+    for n, line in enumerate(code.split("\n"), 1):
+        if call.search(line):
+            hits.append(f"{path}:{n}")
+if hits:
+    print(f"checkpoint outside Lineage.cut at {len(hits)} sites: {hits[:8]}")
+    print("route the cut through graft.util.Lineage: df.cut(eager)")
+    sys.exit(1)
+print("lineage cuts: every checkpoint goes through Lineage.cut")
+EOF
+
 if [[ "${1:-}" == "--sweep" ]]; then
   echo "== [4/5] cross-scale Verify + check @ sf0.1 =="
   SPARK_GRAFT_CPUS=16 tools/run.sh graft.Verify /root/testdata/sf0.1 /tmp/gate_sf01
